@@ -1,8 +1,8 @@
 """Stage 1 — deterministic blocking with explicit skew handling.
 
 pages(url, warc_ts, html, text, lang) →
-  features(url, title_norm, tokens)                      [cached features]
-  blocks(block_key, url)                                 [exploded keys]
+  features(uid, url, title_norm, tok_hashes, block_keys) [one pass per doc]
+  blocks(block_key, uid)                                 [exploded keys]
 
 Block keys per row: the normalized domain (``dom:<host>``) and b LSH band
 keys (``lsh:<band>:<hash>``) over MinHash signatures of word shingles —
@@ -15,9 +15,9 @@ the block-local self-join quadratic. Blocks over the size cap are
 *truncated out of the pair-generation path and logged to lineage* —
 near-dups inside them are still recovered through their LSH band keys,
 which group by content, not domain, and have naturally bounded size
-(band cap logged the same way). The surviving block table is emitted via
-a salted repartition — ``repartition(hash(block_key, salt))`` — so one
-hot key cannot pin a whole shuffle partition.
+(band cap logged the same way). The caps bound every surviving block,
+so the logged census is the whole policy: pair generation's
+``groupBy(block_key)`` (map-side partial ``collect_set``) needs no salt.
 """
 
 from __future__ import annotations
@@ -63,57 +63,62 @@ def uid_expr(url: Column, bits: int = 64) -> Column:
 
 
 def features(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Scoring features, computed once per doc.
+    """The one per-doc projection of the block stage:
+    (uid, url, title_norm, tok_hashes, block_keys).
+
+    ``pages`` is filtered by language and tokenized once; the token array
+    feeds both the scoring tokens and the shingle → MinHash → band-key
+    chain, so no document is scanned or tokenized twice.
 
     Tokens are stored as SORTED DISTINCT 64-bit hashes, not strings: the
     pairwise Jaccard then intersects long arrays (no string hashing, no
     per-row string allocation — the JVM array_intersect on string tokens
     was the single most expensive operator in the score stage, costlier
     than the Python Jaro-Winkler).
+
+    ``block_keys`` is the doc's domain key (``dom:<host>``) followed by
+    its LSH band keys; ``block_keys()`` explodes it.
     """
     df = pages
     if cfg.langs:
         df = df.filter(F.col("lang").isin(list(cfg.langs)))
     title = F.regexp_extract(F.col("html").cast("string"), TITLE_RE, 1)
-    tok_hashes = F.array_sort(
-        F.array_distinct(F.transform(tokens_expr(F.col("text")), lambda t: F.xxhash64(t)))
-    )
-    return df.select(
-        uid_expr(F.col("url"), cfg.uid_bits).alias("uid"),
-        "url",
-        normalize_for_fuzzy_expr(title).alias("title_norm"),
-        tok_hashes.alias("tok_hashes"),
-    )
-
-
-def block_keys(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Exploded (block_key, uid) pairs — domain + LSH band keys."""
-    df = pages
-    if cfg.langs:
-        df = df.filter(F.col("lang").isin(list(cfg.langs)))
-    sig_udf = minhash_signature_udf(k=cfg.minhash_k, seed=cfg.minhash_seed)
     # layered projections: tokens (JVM) → shingle hashes (JVM) →
     # signature (one Arrow batch crossing, numpy) → band keys (JVM).
     # CollapseProject keeps the non-cheap stages separate, so nothing is
     # recomputed per band — and the materialized __toks column keeps the
     # token split out of the per-gram lambda (inlined, it re-ran per gram
     # position: O(n²)/doc, 51 of the 72 s block build at 8 cores)
-    df = df.withColumn("__toks", tokens_expr(F.col("text")))
-    df = df.withColumn(
-        "__hs",
-        shingle_hashes_expr(
-            word_shingles_expr(None, cfg.shingle_words, tokens=F.col("__toks"))
-        ),
-    ).withColumn("__sig", sig_udf(F.col("__hs")))
+    df = df.select(
+        uid_expr(F.col("url"), cfg.uid_bits).alias("uid"),
+        "url",
+        normalize_for_fuzzy_expr(title).alias("title_norm"),
+        tokens_expr(F.col("text")).alias("__toks"),
+    )
+    tok_hashes = F.array_sort(
+        F.array_distinct(F.transform(F.col("__toks"), lambda t: F.xxhash64(t)))
+    )
+    shingles = word_shingles_expr(None, cfg.shingle_words, tokens=F.col("__toks"))
+    df = df.select(
+        "uid", "url", "title_norm",
+        tok_hashes.alias("tok_hashes"),
+        shingle_hashes_expr(shingles).alias("__hs"),
+    )
+    # looked up in this module's namespace at call time, so a kernel
+    # timer patched onto ``blocking.minhash_signature_udf`` applies
+    sig_udf = minhash_signature_udf(k=cfg.minhash_k, seed=cfg.minhash_seed)
+    df = df.withColumn("__sig", sig_udf(F.col("__hs")))
     keys = lsh_band_keys_expr(F.col("__sig"), cfg.lsh_bands, cfg.lsh_rows)
     if cfg.use_domain_blocks:
         keys = F.concat(
             F.array(F.concat(F.lit("dom:"), norm_domain_expr(F.col("url")))), keys
         )
-    return df.select(
-        F.explode(keys).alias("block_key"),
-        uid_expr(F.col("url"), cfg.uid_bits).alias("uid"),
-    )
+    return df.select("uid", "url", "title_norm", "tok_hashes", keys.alias("block_keys"))
+
+
+def block_keys(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Exploded (block_key, uid) pairs — domain + LSH band keys."""
+    return features(pages, cfg).select(F.explode("block_keys").alias("block_key"), "uid")
 
 
 def truncate_oversized(blocks: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame]:
@@ -132,19 +137,3 @@ def truncate_oversized(blocks: DataFrame, cfg: PipelineConfig) -> tuple[DataFram
         blocks.join(F.broadcast(truncated.select("block_key")), "block_key", "left_anti")
     )
     return kept, truncated
-
-
-def salted_repartition(blocks: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Spread hot block keys across shuffle partitions: partition by
-    (block_key, salt) where salt = hash(url) — rows of one key land on
-    many partitions for the downstream per-key self-join, which AQE's
-    skew-join splitting then balances."""
-    n = cfg.salt_shuffle_partitions or int(
-        blocks.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    # the salt is a repartition *expression*, never a materialized column —
-    # nothing to drop afterwards
-    # hash-based salt works for BOTH uid widths (pmod breaks on the
-    # 128-bit struct form)
-    salt = F.pmod(F.xxhash64(F.col("uid")), F.lit(16))
-    return blocks.repartition(n, F.col("block_key"), salt)

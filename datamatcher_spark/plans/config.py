@@ -30,8 +30,7 @@ class PipelineConfig:
     # with a 30%-share head domain: cap 500 → 7× fewer pairs than cap
     # 2000 at F1 0.9998 (precision 1.0).
     max_block_size: int = 500
-    max_band_size: int = 200         # LSH band blocks above this are truncated
-    salt_shuffle_partitions: int = 0  # 0 → spark.sql.shuffle.partitions
+    max_band_size: int = 200  # LSH band blocks above this are truncated
 
     # stage 2 — scoring
     jw_title_threshold: float = 0.90

@@ -79,18 +79,12 @@ class MetricsTable:
         return (self.commits_dir / f"{stage}.json").exists()
 
     def commit(self, stage: str, **info) -> None:
-        """Atomic marker write (tmp + rename) — a half-written marker can
-        never be mistaken for a committed stage."""
-        marker = self.commits_dir / f"{stage}.json"
-        tmp = marker.with_suffix(f".tmp-{uuid.uuid4().hex[:8]}")
-        payload = {
+        write_marker(self.commits_dir / f"{stage}.json", {
             "run_id": self.run_id,
             "stage": stage,
             "committed_at": dt.datetime.now(dt.timezone.utc).isoformat(),
             **info,
-        }
-        tmp.write_text(json.dumps(payload, indent=2))
-        os.replace(tmp, marker)
+        })
 
     def read_commit(self, stage: str) -> dict | None:
         marker = self.commits_dir / f"{stage}.json"
@@ -99,9 +93,16 @@ class MetricsTable:
         return json.loads(marker.read_text())
 
 
+def write_marker(marker: Path, payload: dict) -> None:
+    """Atomic commit-marker write (tmp + rename) — a half-written marker
+    can never be mistaken for a committed stage."""
+    tmp = marker.with_suffix(f".tmp-{uuid.uuid4().hex[:8]}")
+    tmp.write_text(json.dumps(payload, indent=2, default=str))
+    os.replace(tmp, marker)
+
+
 def partition_lineage(df: DataFrame, *, score_col: str | None = None,
-                      block_col: str | None = None, buckets: int = 20,
-                      accept_col: str | None = None) -> DataFrame:
+                      buckets: int = 20, accept_col: str | None = None) -> DataFrame:
     """Per-partition lineage aggregate: pair/row counts and (optionally) a
     bucketed score histogram, grouped by physical partition id.
 
@@ -130,9 +131,4 @@ def partition_lineage(df: DataFrame, *, score_col: str | None = None,
             outer.append(F.sum("acc_n").cast("long").alias("accepted_n"))
         per_bucket = d.groupBy("partition_id", "score_bucket").agg(*inner)
         return per_bucket.groupBy("partition_id").agg(*outer)
-    if block_col is not None:
-        return d.groupBy("partition_id").agg(
-            F.count("*").alias("pair_count"),
-            F.count_distinct(F.col(block_col)).cast("long").alias("n_blocks"),
-        ).drop("n_blocks")
     return d.groupBy("partition_id").agg(*aggs)

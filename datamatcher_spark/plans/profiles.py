@@ -173,6 +173,7 @@ def execute_profile(
     )
     from datamatcher_spark.operators.merge import apply_mappings
     from datamatcher_spark.operators.report_render import change_log
+    from datamatcher_spark.plans.lineage import write_marker
 
     from pyspark.sql import functions as F
 
@@ -263,9 +264,7 @@ def execute_profile(
             if wd:  # commit a pass-through marker so resume indexing holds
                 df.write.mode("overwrite").parquet(_out(i))
                 df = spark.read.parquet(_out(i))
-                _marker(i).write_text(
-                    _json.dumps({"source": spec.name, "profile_fp": fp})
-                )
+                write_marker(_marker(i), {"source": spec.name, "profile_fp": fp})
             continue
         src = load(spec.path)
         opts = spec.key_options or profile.base.key_options
@@ -329,14 +328,11 @@ def execute_profile(
             if clog is not None:
                 clog.write.mode("overwrite").parquet(_clog_out(i))
                 change_logs.append(spark.read.parquet(_clog_out(i)))
-            _marker(i).write_text(
-                _json.dumps(
-                    {"source": spec.name, "profile_fp": fp,
-                     "source_info": source_info, "mappings_info": minfo,
-                     "change_log": clog is not None},
-                    default=str,
-                )
-            )
+            write_marker(_marker(i), {
+                "source": spec.name, "profile_fp": fp,
+                "source_info": source_info, "mappings_info": minfo,
+                "change_log": clog is not None,
+            })
     if export_change_log:
         from functools import reduce
 

@@ -12,15 +12,10 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from datamatcher_spark.plans.blocking import (
-    block_keys,
-    features,
-    salted_repartition,
-    truncate_oversized,
-)
+from datamatcher_spark.plans.blocking import features, truncate_oversized
 from datamatcher_spark.plans.clustering import connected_components
 from datamatcher_spark.plans.config import PipelineConfig
 from datamatcher_spark.plans.lineage import MetricsTable, partition_lineage
@@ -68,33 +63,33 @@ def run_pipeline(
         stages_skipped.append("block")
     else:
         t0 = time.monotonic()
-        feats = features(pages, cfg)
-        feats.write.mode("overwrite").parquet(feats_path)
-        # persist the raw block table: the size census and the kept-side
-        # anti-join both consume it, and recomputing it would run the
-        # MinHash signature UDF twice over the whole corpus
-        raw_blocks = block_keys(pages, cfg).persist()
-        try:
-            _, truncated_census = truncate_oversized(raw_blocks, cfg)
-            truncated = truncated_census.collect()  # tiny; needed twice below
-            truncated_df = spark.createDataFrame(
-                truncated or [], "block_key string, block_size long"
-            )
-            kept = raw_blocks.join(
-                F.broadcast(truncated_df.select("block_key")), "block_key", "left_anti"
-            )
-            salted_repartition(kept, cfg).write.mode("overwrite").parquet(blocks_path)
-        finally:
-            raw_blocks.unpersist()
+        # ONE pass over pages: the features parquet carries each doc's
+        # block_keys array, and the doc count rides on the same write
+        seen = Observation("features")
+        (features(pages, cfg)
+         .observe(seen, F.count(F.lit(1)).alias("docs"))
+         .write.mode("overwrite").parquet(feats_path))
+        counts["docs"] = seen.get["docs"]
+        raw_blocks = spark.read.parquet(feats_path).select(
+            F.explode("block_keys").alias("block_key"), "uid"
+        )
+        _, truncated_census = truncate_oversized(raw_blocks, cfg)
+        truncated = truncated_census.collect()  # tiny; needed twice below
+        truncated_df = spark.createDataFrame(
+            truncated or [], "block_key string, block_size long"
+        )
+        raw_blocks.join(
+            F.broadcast(truncated_df.select("block_key")), "block_key", "left_anti"
+        ).write.mode("overwrite").parquet(blocks_path)
         wall = int((time.monotonic() - t0) * 1000)
 
         blocks_df = spark.read.parquet(blocks_path)
         # ONE pass over the block table serves both the lineage rows and
-        # the row count: the per-partition aggregate is tiny (≤ shuffle
-        # partitions rows), so collect it, append from the collected rows,
+        # the row count: the per-partition aggregate is tiny (one row per
+        # partition), so collect it, append from the collected rows,
         # and fold the total driver-side — a separate blocks_df.count()
         # was a second full scan of the largest stage-1 output
-        lineage_rows = partition_lineage(blocks_df, block_col="block_key").collect()
+        lineage_rows = partition_lineage(blocks_df).collect()
         mt.append(
             spark.createDataFrame(
                 lineage_rows or [], "partition_id int, pair_count long"
@@ -112,7 +107,7 @@ def run_pipeline(
         counts["blocks"] = sum(r.pair_count for r in lineage_rows)
         counts["truncated_blocks"] = len(truncated)
         counts["block_wall_ms"] = wall
-        mt.commit("block", **{k: counts[k] for k in ("blocks", "truncated_blocks")})
+        mt.commit("block", **{k: counts[k] for k in ("docs", "blocks", "truncated_blocks")})
         stages_run.append("block")
 
     # ---- stage 2: score ------------------------------------------------------
@@ -124,7 +119,9 @@ def run_pipeline(
         blocks_df = spark.read.parquet(blocks_path)
         feats_df = spark.read.parquet(feats_path)
         pairs = candidate_pairs(blocks_df)
-        scored = score_pairs(pairs, feats_df, cfg)
+        # the doc count comes from the block marker, so a resumed run
+        # picks the same feature-join strategy without recounting
+        scored = score_pairs(pairs, feats_df, cfg, mt.read_commit("block")["docs"])
         scored.write.mode("overwrite").parquet(edges_path)
         wall = int((time.monotonic() - t0) * 1000)
 
@@ -160,18 +157,6 @@ def run_pipeline(
     if mt.is_committed("cluster"):
         stages_skipped.append("cluster")
     else:
-        # The CC loop is GC-sensitive: each round is three small keyed
-        # exchanges plus a localCheckpoint, so tenured garbage from the
-        # block/score stages (feature arrays, shuffle buffers) turns
-        # into repeated old-gen pauses INSIDE the rounds (observed: the
-        # same 960k cluster stage at 6.7 s in a fresh session vs 41.4 s
-        # after a full suite had filled the heap). One explicit full
-        # collection at the stage boundary pays the pause once, outside
-        # the loop.
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass  # py4j surface may differ; the GC nudge is best-effort
         t0 = time.monotonic()
         edges = spark.read.parquet(edges_path).filter("accepted")
         # CC runs on 8-byte uids; urls are joined back once at the end

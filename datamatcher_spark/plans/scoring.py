@@ -43,11 +43,11 @@ def candidate_pairs(blocks: DataFrame) -> DataFrame:
     # O(1) array read, where the previous slice-per-position form copied
     # a suffix array for every left element (the word_shingles_expr
     # lesson — measured 2.5 s → 1.65 s at 4M pairs, identical pair set).
-    # Both sequences ascend (size ≥ 2 is guaranteed by the filter below,
-    # so 1 ≤ sz−1 and i+1 ≤ sz), never hitting sequence()'s descending
-    # mode.
+    # Both sequences ascend under the sz >= 2 guard (1 ≤ sz−1 and
+    # i+1 ≤ sz), never hitting sequence()'s descending mode; a size-1
+    # block yields no pairs.
     uids, sz = F.col("uids"), F.size(F.col("uids"))
-    combos = F.flatten(
+    combos = F.when(sz >= 2, F.flatten(
         F.transform(
             F.sequence(F.lit(1), sz - 1),
             lambda i: F.transform(
@@ -58,19 +58,20 @@ def candidate_pairs(blocks: DataFrame) -> DataFrame:
                 ),
             ),
         )
-    )
+    ))
     return (
-        members.filter(F.size("uids") >= 2)
-        .select(F.explode(combos).alias("p"))
+        members.select(F.explode(combos).alias("p"))
         .select("p.uid_a", "p.uid_b")
         .distinct()
     )
 
 
-def score_pairs(pairs: DataFrame, feats: DataFrame, cfg: PipelineConfig) -> DataFrame:
+def score_pairs(pairs: DataFrame, feats: DataFrame, cfg: PipelineConfig,
+                docs: int) -> DataFrame:
     """Join features onto pairs and score. Returns every scored pair with
     its score and accept flag (lineage wants the full histogram, not just
-    accepted edges).
+    accepted edges). ``docs`` is the row count of ``feats`` (the block
+    stage records it), which picks the feature-join strategy.
 
     The pair table is slim (16 B/row) but every row costs real CPU
     downstream (array Jaccard + the Arrow JW kernel), so it must be
@@ -96,12 +97,11 @@ def score_pairs(pairs: DataFrame, feats: DataFrame, cfg: PipelineConfig) -> Data
     # Explicit join strategy — never trust the static size estimate here:
     # feats comes from parquet whose stats undercount the in-memory
     # token-hash arrays ~20×, so the planner happily broadcasts a table
-    # that explodes the driver (observed at 480k docs / 4 GB heap). Count
-    # the rows (parquet-metadata cheap) and choose: small corpus →
-    # broadcast both sides; otherwise shuffle-hash on uid (the
-    # 10^12-doc plan — co-partitioned with the pair stream, no sort on
-    # the big side).
-    if feats.count() <= cfg.broadcast_feature_rows:
+    # that explodes the driver (observed at 480k docs / 4 GB heap). The
+    # caller's doc count chooses: small corpus → broadcast both sides;
+    # otherwise shuffle-hash on uid (the 10^12-doc plan — co-partitioned
+    # with the pair stream, no sort on the big side).
+    if docs <= cfg.broadcast_feature_rows:
         fa, fb = F.broadcast(fa), F.broadcast(fb)
     else:
         fa, fb = fa.hint("shuffle_hash"), fb.hint("shuffle_hash")

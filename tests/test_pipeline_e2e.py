@@ -90,16 +90,70 @@ def test_uid_bits_128(spark, corpus, tmp_path_factory):
 
 
 def test_partial_resume(spark, corpus, tmp_path_factory):
-    """Simulate a crash after stage 2: markers for block+score exist, the
-    relaunch runs only cluster."""
+    """Simulate a crash inside a later stage: wipe that stage's commit
+    marker and relaunch. Only that stage reruns, with the counts of the
+    full run; a score rerun takes the doc count from the block marker."""
+    import os
+
     pt, _ = corpus
     work = str(tmp_path_factory.mktemp("pipe_partial"))
     pages = pt.drop("cluster_id")
     full = run_pipeline(spark, pages, work, "r3", PipelineConfig())
-    # wipe only the cluster commit marker (as if we died mid-stage-3)
-    import os
+    assert full.metrics.read_commit("block")["docs"] == pt.count()
+    cases = [
+        ("cluster", ["block", "score"], ("clusters", "cc_iterations")),
+        ("score", ["block", "cluster"], ("pairs_scored", "edges_accepted")),
+    ]
+    for stage, skipped, keys in cases:
+        os.remove(full.metrics.commits_dir / f"{stage}.json")
+        resumed = run_pipeline(spark, pages, work, "r3", PipelineConfig())
+        assert resumed.stages_skipped == skipped
+        assert resumed.stages_run == [stage]
+        assert {k: resumed.counts[k] for k in keys} == {k: full.counts[k] for k in keys}
 
-    os.remove(full.metrics.commits_dir / "cluster.json")
-    resumed = run_pipeline(spark, pages, work, "r3", PipelineConfig())
-    assert resumed.stages_skipped == ["block", "score"]
-    assert resumed.stages_run == ["cluster"]
+
+def test_committed_blocks_equal_primitive_reference(spark, tmp_path):
+    """The committed block table must equal (block_key, uid) rebuilt from
+    the primitive expressions — the dom: key plus lsh_band_keys_expr over
+    the MinHash UDF of the text-path shingles — minus the truncation
+    census, which must name every over-cap key at its full size."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from datamatcher_spark.functions.minhash import (
+        lsh_band_keys_expr,
+        minhash_signature_udf,
+        shingle_hashes_expr,
+        word_shingles_expr,
+    )
+    from datamatcher_spark.norm.keys import norm_domain_expr
+
+    # small caps so both the domain and the band census are non-empty;
+    # the language filter drops some docs
+    cfg = PipelineConfig(max_block_size=40, max_band_size=3, langs=("en", "de"))
+    pages = generate_pages_with_truth(spark, n_docs=400, seed=7).drop("cluster_id")
+    res = run_pipeline(spark, pages, str(tmp_path), "blk", cfg)
+
+    kept_pages = pages.filter(F.col("lang").isin("en", "de"))
+    hs = kept_pages.withColumn(
+        "hs", shingle_hashes_expr(word_shingles_expr(F.col("text"), cfg.shingle_words))
+    ).withColumn("sig", minhash_signature_udf(cfg.minhash_k, cfg.minhash_seed)(F.col("hs")))
+    keys = F.concat(
+        F.array(F.concat(F.lit("dom:"), norm_domain_expr(F.col("url")))),
+        lsh_band_keys_expr(F.col("sig"), cfg.lsh_bands, cfg.lsh_rows),
+    )
+    ref = [(r.k, r.uid) for r in hs.select(
+        F.explode(keys).alias("k"), F.xxhash64("url").alias("uid")).collect()]
+    sizes = Counter(k for k, _ in ref)
+    cap = {True: cfg.max_block_size, False: cfg.max_band_size}
+    over = {k: n for k, n in sizes.items() if n > cap[k.startswith("dom:")]}
+    assert any(k.startswith("dom:") for k in over) and any(k.startswith("lsh:") for k in over)
+
+    got = [(r.block_key, r.uid) for r in spark.read.parquet(
+        res.metrics.stage_output_path("block")).collect()]
+    assert sorted(got) == sorted((k, u) for k, u in ref if k not in over)
+    census = {r.block_key: r.pair_count for r in res.metrics.read()
+              .filter("stage = 'block_truncated'").collect()}
+    assert census == over
+    assert res.metrics.read_commit("block")["docs"] == kept_pages.count()

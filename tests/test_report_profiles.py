@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+
 from datamatcher_spark.plans.profiles import match_profile
 
 
@@ -231,3 +233,71 @@ def test_execute_profile_mid_job_resume(spark, tmp_path):
     assert loads == []
     assert {(r.ean, r.title, r.brand) for r in out3.collect()} == full
     assert si3 == si2 and mi3 == mi2
+
+
+def test_execute_profile_torn_marker_relaunch(spark, tmp_path, monkeypatch):
+    """A crash halfway through writing a source's commit marker must not
+    leave a marker behind: the relaunch refolds that source (and only
+    it) and returns a clean run's result."""
+    from pathlib import Path
+
+    from datamatcher_spark.operators.merge import ColumnMapping, WriteMode
+    from datamatcher_spark.plans.profiles import (
+        Profile,
+        SourceSpec,
+        execute_profile,
+    )
+
+    frames = {
+        "base": spark.createDataFrame(
+            [("1", "t-old", ""), ("2", "", "")],
+            "ean string, title string, brand string",
+        ),
+        "s1": spark.createDataFrame([("1", "T1")], "ean string, tytul string"),
+        "s2": spark.createDataFrame([("2", "B2")], "ean string, marka string"),
+    }
+    loads: list[str] = []
+
+    def load(p):
+        loads.append(p)
+        return frames[p]
+
+    prof = Profile(
+        name="torn",
+        base=SourceSpec("base", "base", "ean"),
+        sources=[SourceSpec("s1", "s1", "ean"), SourceSpec("s2", "s2", "ean")],
+        mappings=[
+            ColumnMapping(source_column="tytul", target_column="title",
+                          write_mode=WriteMode.OVERWRITE, source_id="s1"),
+            ColumnMapping(source_column="marka", target_column="brand",
+                          write_mode=WriteMode.FILL_EMPTY, source_id="s2"),
+        ],
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    clean, clean_si, clean_mi = execute_profile(
+        spark, prof, load=load, work_dir=tmp_path / "clean")
+    want = rows(clean)
+
+    write_text = Path.write_text
+
+    def torn(self, data, *a, **kw):
+        """Source 1's marker write dies halfway through its bytes."""
+        if self.parent.name == "commits" and self.name.startswith("source_1"):
+            write_text(self, data[: len(data) // 2], *a, **kw)
+            raise OSError("disk full")
+        return write_text(self, data, *a, **kw)
+
+    wd = tmp_path / "torn"
+    monkeypatch.setattr(Path, "write_text", torn)
+    with pytest.raises(OSError, match="disk full"):
+        execute_profile(spark, prof, load=load, work_dir=wd)
+    monkeypatch.undo()
+
+    loads.clear()
+    out, si, mi = execute_profile(spark, prof, load=load, work_dir=wd)
+    assert loads == ["s2"], "the relaunch must refold source 1 only"
+    assert rows(out) == want
+    assert (si, mi) == (clean_si, clean_mi)

@@ -501,7 +501,7 @@ def test_xlsb_garbage_fails_loudly(spark, tmp_path):
 def test_skew_stress_census_and_task_balance(spark):
     """A mega-domain (~10% of docs) and a boilerplate band must (a) land
     in the truncation census — never silently dropped — and (b) leave the
-    salted + compute-dense-repartitioned score stage with BOUNDED task
+    compute-dense-repartitioned score stage with BOUNDED task
     skew (max/median per-task wall and row ratios), measured with an
     in-job per-partition timer (the upstream scoring compute pipelines
     into the timing task)."""
@@ -514,7 +514,6 @@ def test_skew_stress_census_and_task_balance(spark):
     from datamatcher_spark.plans.blocking import (
         block_keys,
         features,
-        salted_repartition,
         truncate_oversized,
     )
     from datamatcher_spark.plans.config import PipelineConfig
@@ -541,10 +540,10 @@ def test_skew_stress_census_and_task_balance(spark):
         mx = kept.groupBy("block_key").count().agg(F.max("count")).first()[0]
         assert mx <= max(cfg.max_block_size, cfg.max_band_size)
 
-        # (b) task balance through the salted + compute-dense score stage
+        # (b) task balance through the compute-dense score stage
         feats = features(pages, cfg)
-        pairs = candidate_pairs(salted_repartition(kept, cfg))
-        scored = score_pairs(pairs, feats, cfg).select(
+        pairs = candidate_pairs(kept)
+        scored = score_pairs(pairs, feats, cfg, feats.count()).select(
             "jw_title", "jaccard_text", "score", "accepted"
         )
 
