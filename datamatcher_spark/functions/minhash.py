@@ -165,7 +165,8 @@ def minhash_signature_udf(k: int = 64, seed: int = 1337):
 
 def lsh_band_keys_expr(signature: Column, bands: int = 16, rows: int = 4) -> Column:
     """array<string> of ``lsh:<band>:<hash>`` blocking keys (b·r must equal
-    the signature length).
+    the signature length; any other length, or null, raises the same
+    error whether ANSI mode is on or off).
 
     r7: each band hashes ``concat_ws`` over its ``rows`` scalar
     ``element_at`` reads cast individually — the previous
@@ -175,7 +176,7 @@ def lsh_band_keys_expr(signature: Column, bands: int = 16, rows: int = 4) -> Col
     ``concat_ws(",", cast(s[o]), …, cast(s[o+r−1]))`` — A/B over 200k
     docs: 0 mismatches), measured 3.7 s → 1.24 s for the 200k-doc band
     build."""
-    return F.array(
+    keys = F.array(
         *[
             F.concat(
                 F.lit(f"lsh:{j}:"),
@@ -193,6 +194,8 @@ def lsh_band_keys_expr(signature: Column, bands: int = 16, rows: int = 4) -> Col
             for j in range(bands)
         ]
     )
+    bad = F.raise_error(F.lit(f"lsh_band_keys_expr: signature length must be {bands * rows}"))
+    return F.when(F.size(signature) == bands * rows, keys).otherwise(bad)
 
 
 def jaccard_tokens_expr(a: Column, b: Column) -> Column:

@@ -140,16 +140,17 @@ def execute_profile(
     miss fuzzy keep NO_MATCH lineage.
 
     ``work_dir`` enables MID-JOB RESUME — the enrichment-side analogue of
-    ``plans.run``'s commit markers and of the reference's persisted
-    session position (utils/session.py:17-98): each completed source fold
-    writes its output parquet plus a commit marker carrying that source's
-    report stats AND the profile fingerprint. A relaunch with the same
+    the reference's persisted session position (utils/session.py:17-98),
+    on the same ``lineage.StageCommits`` protocol as ``plans.run``'s
+    stages: each completed source fold writes its output parquet, then
+    ``commits/source_<i>.json`` carrying that source's report stats,
+    stamped with ``profile_fingerprint``. A relaunch with the same
     work_dir restarts from the LAST COMMITTED source (reading its
     parquet, replaying its recorded stats) instead of refolding every
-    source from scratch; markers whose fingerprint doesn't match the
-    CURRENT profile (sources/keys/mappings/filter edited since) are
-    ignored — the job restarts cleanly rather than resuming stale
-    parquet. Without ``work_dir`` the job is a single lazy plan.
+    source from scratch; a marker committed under another fingerprint
+    (sources/keys/mappings/filter edited since) reads as absent — the
+    job restarts cleanly rather than resuming stale parquet. Without
+    ``work_dir`` the job is a single lazy plan.
 
     ``export_change_log=True`` additionally produces the reference's
     per-cell change-log artifact for the WHOLE run (the report dialog's
@@ -164,8 +165,6 @@ def execute_profile(
     source's log re-derives its upstream folds at write time — fine at
     report scale, use a work_dir for big jobs).
     """
-    import json as _json
-
     from datamatcher_spark.operators.enrich import (
         enrich_join,
         fuzzy_fallback_join,
@@ -173,7 +172,7 @@ def execute_profile(
     )
     from datamatcher_spark.operators.merge import apply_mappings
     from datamatcher_spark.operators.report_render import change_log
-    from datamatcher_spark.plans.lineage import write_marker
+    from datamatcher_spark.plans.lineage import StageCommits
 
     from pyspark.sql import functions as F
 
@@ -194,28 +193,18 @@ def execute_profile(
             return load_file(spark, p)
 
     wd = Path(work_dir) if work_dir else None
-    fp = profile_fingerprint(profile)
-    if wd:
-        (wd / "commits").mkdir(parents=True, exist_ok=True)
-
-    def _marker(i: int) -> Path:
-        return wd / "commits" / f"source_{i}.json"
+    commits = StageCommits(wd / "commits", profile_fingerprint(profile)) if wd else None
 
     def _marker_doc(i: int) -> dict | None:
         """Committed marker for source i, or None when absent/stale.
-        Stale means: fingerprint mismatch (the profile changed since the
-        commit), or — when THIS run exports the change log — a fold
-        marker committed by a run that did NOT capture per-source logs
-        (``change_log`` absent): resuming it would silently omit that
-        source from the artifact, so the fold is redone instead.
-        Pass-through markers (no bound mappings ⇒ no ``source_info``)
-        never carry a log and stay valid either way."""
-        if not _marker(i).exists():
-            return None
-        doc = _json.loads(_marker(i).read_text())
-        if doc.get("profile_fp") != fp:
-            return None
-        if export_change_log and doc.get("source_info") and not doc.get("change_log"):
+        Beyond ``StageCommits``' fingerprint rule, a fold marker is stale
+        when THIS run exports the change log and the committing run did
+        NOT capture per-source logs (``change_log`` absent): resuming it
+        would silently omit that source from the artifact, so the fold
+        is redone instead. Pass-through markers (no bound mappings ⇒ no
+        ``source_info``) never carry a log and stay valid either way."""
+        doc = commits.read(f"source_{i}")
+        if doc and export_change_log and doc.get("source_info") and not doc.get("change_log"):
             return None
         return doc
 
@@ -264,7 +253,7 @@ def execute_profile(
             if wd:  # commit a pass-through marker so resume indexing holds
                 df.write.mode("overwrite").parquet(_out(i))
                 df = spark.read.parquet(_out(i))
-                write_marker(_marker(i), {"source": spec.name, "profile_fp": fp})
+                commits.write(f"source_{i}", source=spec.name)
             continue
         src = load(spec.path)
         opts = spec.key_options or profile.base.key_options
@@ -328,11 +317,9 @@ def execute_profile(
             if clog is not None:
                 clog.write.mode("overwrite").parquet(_clog_out(i))
                 change_logs.append(spark.read.parquet(_clog_out(i)))
-            write_marker(_marker(i), {
-                "source": spec.name, "profile_fp": fp,
-                "source_info": source_info, "mappings_info": minfo,
-                "change_log": clog is not None,
-            })
+            commits.write(f"source_{i}", source=spec.name,
+                          source_info=source_info, mappings_info=minfo,
+                          change_log=clog is not None)
     if export_change_log:
         from functools import reduce
 

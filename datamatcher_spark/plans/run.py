@@ -3,14 +3,18 @@ lineage, commit markers, and resume-from-last-committed-stage.
 
 Analogue of the reference's headless lifecycle (main.py:35-134 +
 SessionManager restore, utils/session.py:17-98): each stage writes its
-output parquet and a commit marker; relaunching with the same
-(work_dir, run_id) skips committed stages and reads their outputs — the
-driver-side resume orchestration SURVEY §4 item 4 calls for.
+output parquet, its lineage and then a fingerprinted commit marker;
+relaunching with the same (work_dir, run_id, config, input) skips
+committed stages and reads their outputs — the driver-side resume
+orchestration SURVEY §4 item 4 calls for.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import time
+from dataclasses import asdict
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -50,7 +54,7 @@ def run_pipeline(
     from datamatcher_spark.operators.dedup import release_orphaned_caches
 
     release_orphaned_caches()
-    mt = MetricsTable(spark, work_dir, run_id)
+    mt = MetricsTable(spark, work_dir, run_id, _fingerprint(spark, pages, cfg))
     stages_run: list[str] = []
     stages_skipped: list[str] = []
     counts: dict = {}
@@ -59,7 +63,7 @@ def run_pipeline(
     # ---- stage 1: block ----------------------------------------------------
     blocks_path = mt.stage_output_path("block")
     feats_path = mt.stage_output_path("features")
-    if mt.is_committed("block"):
+    if mt.read_commit("block"):
         stages_skipped.append("block")
     else:
         t0 = time.monotonic()
@@ -83,36 +87,26 @@ def run_pipeline(
         ).write.mode("overwrite").parquet(blocks_path)
         wall = int((time.monotonic() - t0) * 1000)
 
-        blocks_df = spark.read.parquet(blocks_path)
         # ONE pass over the block table serves both the lineage rows and
         # the row count: the per-partition aggregate is tiny (one row per
-        # partition), so collect it, append from the collected rows,
-        # and fold the total driver-side — a separate blocks_df.count()
-        # was a second full scan of the largest stage-1 output
-        lineage_rows = partition_lineage(blocks_df).collect()
-        mt.append(
-            spark.createDataFrame(
-                lineage_rows or [], "partition_id int, pair_count long"
-            ),
-            "block",
-            wall,
-        )
+        # partition), so collect it and fold the total driver-side — a
+        # separate count() was a second full scan of the largest stage-1
+        # output
+        lineage_rows = partition_lineage(spark.read.parquet(blocks_path)).collect()
         # truncated-block census: never silent (one lineage row per block)
-        trunc_rows = truncated_df.select(
-            F.lit(None).cast("int").alias("partition_id"),
-            F.col("block_key"),
-            F.col("block_size").alias("pair_count"),
-        )
-        mt.append(trunc_rows, "block_truncated", wall)
+        mt.append("block_truncated", [
+            {"block_key": r.block_key, "pair_count": r.block_size} for r in truncated
+        ], wall)
         counts["blocks"] = sum(r.pair_count for r in lineage_rows)
         counts["truncated_blocks"] = len(truncated)
         counts["block_wall_ms"] = wall
-        mt.commit("block", **{k: counts[k] for k in ("docs", "blocks", "truncated_blocks")})
+        mt.commit("block", [r.asDict() for r in lineage_rows], wall,
+                  **{k: counts[k] for k in ("docs", "blocks", "truncated_blocks")})
         stages_run.append("block")
 
     # ---- stage 2: score ------------------------------------------------------
     edges_path = mt.stage_output_path("score")
-    if mt.is_committed("score"):
+    if mt.read_commit("score"):
         stages_skipped.append("score")
     else:
         t0 = time.monotonic()
@@ -127,34 +121,24 @@ def run_pipeline(
 
         scored_df = spark.read.parquet(edges_path)
         # one pass serves lineage + totals (same fusion as the block
-        # stage): the per-partition aggregate is tiny, so collect it,
-        # append the METRICS_SCHEMA columns, and fold pair/accepted
-        # totals driver-side — the separate count/count_if agg was a
-        # second full scan of the scored-pair table
+        # stage): collect the tiny per-partition aggregate and fold
+        # pair/accepted totals driver-side — the separate count/count_if
+        # agg was a second full scan of the scored-pair table
         lineage_rows = partition_lineage(
             scored_df, score_col="score", buckets=cfg.histogram_buckets,
             accept_col="accepted",
         ).collect()
-        mt.append(
-            spark.createDataFrame(
-                [(r.partition_id, r.pair_count, r.score_histogram)
-                 for r in lineage_rows] or [],
-                "partition_id int, pair_count long, "
-                "score_histogram map<string,long>",
-            ),
-            "score",
-            wall,
-        )
         counts["pairs_scored"] = sum(r.pair_count for r in lineage_rows)
         counts["edges_accepted"] = sum(r.accepted_n for r in lineage_rows)
         counts["score_wall_ms"] = wall
-        mt.commit("score", **{k: counts[k] for k in
-                              ("pairs_scored", "edges_accepted", "score_wall_ms")})
+        mt.commit("score", [r.asDict() for r in lineage_rows], wall,
+                  **{k: counts[k] for k in
+                     ("pairs_scored", "edges_accepted", "score_wall_ms")})
         stages_run.append("score")
 
     # ---- stage 3: cluster ----------------------------------------------------
     clusters_path = mt.stage_output_path("cluster")
-    if mt.is_committed("cluster"):
+    if mt.read_commit("cluster"):
         stages_skipped.append("cluster")
     else:
         t0 = time.monotonic()
@@ -168,26 +152,45 @@ def run_pipeline(
         uid_url = spark.read.parquet(feats_path).select("uid", "url")
         assigned = cc.select(F.col("node").alias("uid"),
                              F.col("component").alias("cluster_id"))
-        clusters = (
-            uid_url.join(assigned, "uid", "left")
-            .select(
-                "url",
-                F.coalesce(F.col("cluster_id"), F.col("uid")).alias("cluster_id"),
-            )
+        clusters = uid_url.join(assigned, "uid", "left").withColumn(
+            "cluster_id", F.coalesce(F.col("cluster_id"), F.col("uid"))
         )
-        clusters.write.mode("overwrite").parquet(clusters_path)
+        # CC labels each component by its minimum node and a singleton is
+        # its own root, so every cluster has exactly one row whose id is
+        # its own uid: the write counts those, no distinct() job
+        seen = Observation("clusters")
+        (clusters
+         .observe(seen, F.count_if(F.col("cluster_id") == F.col("uid")).alias("clusters"))
+         .select("url", "cluster_id")
+         .write.mode("overwrite").parquet(clusters_path))
+        counts["clusters"] = seen.get["clusters"]
         wall = int((time.monotonic() - t0) * 1000)
 
-        clusters_df = spark.read.parquet(clusters_path)
-        mt.append(partition_lineage(clusters_df), "cluster", wall)
-        counts["clusters"] = clusters_df.select("cluster_id").distinct().count()
+        lineage_rows = partition_lineage(spark.read.parquet(clusters_path)).collect()
         counts["cc_iterations"] = cc_iters
         counts["cluster_wall_ms"] = wall
-        mt.commit("cluster", **{k: counts[k] for k in ("clusters", "cc_iterations")})
+        mt.commit("cluster", [r.asDict() for r in lineage_rows], wall,
+                  **{k: counts[k] for k in ("clusters", "cc_iterations")})
         stages_run.append("cluster")
 
     clusters_df = spark.read.parquet(clusters_path)
     return PipelineResult(clusters_df, mt, stages_run, stages_skipped, cc_iters, counts)
+
+
+def _fingerprint(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig) -> str:
+    """Hash of what a committed stage depends on: the config, the input
+    schema and each input file's (path, size, mtime), stat'ed through the
+    path's Hadoop FileSystem on the driver. In-memory input has no files;
+    its plan's semanticHash stands in, which is stable only within one
+    process, so it can force a rerun but never a stale resume."""
+    conf = spark._jsc.hadoopConfiguration()
+    files = []
+    for f in sorted(pages.inputFiles()):
+        path = spark._jvm.org.apache.hadoop.fs.Path(f)
+        st = path.getFileSystem(conf).getFileStatus(path)
+        files.append((f, st.getLen(), st.getModificationTime()))
+    doc = [asdict(cfg), pages.schema.json(), files or pages.semanticHash()]
+    return hashlib.sha256(json.dumps(doc).encode()).hexdigest()[:16]
 
 
 def pairwise_f1(clusters: DataFrame, labeled_pairs: DataFrame) -> dict:

@@ -79,3 +79,21 @@ def test_jaccard_tokens(spark):
 def test_tokens_expr_drops_empties(spark):
     df = spark.createDataFrame([("  Hello   WORLD  ",)], "t string")
     assert df.select(tokens_expr(F.col("t")).alias("x")).first().x == ["hello", "world"]
+
+
+def test_lsh_band_keys_short_signature_fails_in_both_ansi_modes(spark):
+    """A signature shorter than bands·rows raises the same error whether
+    ANSI mode is on or off (the bare element_at reads would throw under
+    ANSI and silently read nulls without it)."""
+    import pytest
+    from pyspark.errors import PySparkException
+
+    df = spark.createDataFrame([(list(range(10)),)], "sig array<bigint>")
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            with pytest.raises(PySparkException, match="signature length must be 64"):
+                df.select(lsh_band_keys_expr(F.col("sig"), 16, 4)).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", before)

@@ -22,6 +22,21 @@ def corpus(spark):
     return pt, pairs
 
 
+def _lineage(res):
+    """The run's lineage rows as a multiset, minus wall and timestamp."""
+    from collections import Counter
+
+    return Counter(
+        (r.run_id, r.stage, r.partition_id, r.block_key, r.pair_count,
+         tuple(sorted((r.score_histogram or {}).items())))
+        for r in res.metrics.read().collect()
+    )
+
+
+def _clusters(res):
+    return {(r.url, r.cluster_id) for r in res.clusters.collect()}
+
+
 def test_f1_gate(spark, corpus, tmp_path_factory):
     pt, labeled = corpus
     work = str(tmp_path_factory.mktemp("pipe"))
@@ -29,6 +44,8 @@ def test_f1_gate(spark, corpus, tmp_path_factory):
     m = pairwise_f1(res.clusters, labeled)
     assert m["f1"] >= 0.99, m
     assert res.stages_run == ["block", "score", "cluster"]
+    # the cluster count observed on the write (one root row per cluster)
+    assert res.counts["clusters"] == res.clusters.select("cluster_id").distinct().count()
     # lineage rows exist for every stage
     stages = {r.stage for r in res.metrics.read().select("stage").distinct().collect()}
     assert {"block", "score", "cluster"} <= stages
@@ -70,6 +87,8 @@ def test_uid_bits_128(spark, corpus, tmp_path_factory):
     r128 = run_pipeline(spark, pages, work128, "u128", PipelineConfig(uid_bits=128))
     assert r64.counts["pairs_scored"] == r128.counts["pairs_scored"]
     assert r64.counts["clusters"] == r128.counts["clusters"]
+    # struct uids: the observed root-row count is still the cluster count
+    assert r128.counts["clusters"] == r128.clusters.select("cluster_id").distinct().count()
 
     def cluster_sets(res):
         rows = res.clusters.groupBy("cluster_id").agg(
@@ -91,14 +110,16 @@ def test_uid_bits_128(spark, corpus, tmp_path_factory):
 
 def test_partial_resume(spark, corpus, tmp_path_factory):
     """Simulate a crash inside a later stage: wipe that stage's commit
-    marker and relaunch. Only that stage reruns, with the counts of the
-    full run; a score rerun takes the doc count from the block marker."""
+    marker and relaunch. Only that stage reruns, with the counts and the
+    lineage rows of the full run (replaced, not appended twice); a score
+    rerun takes the doc count from the block marker."""
     import os
 
     pt, _ = corpus
     work = str(tmp_path_factory.mktemp("pipe_partial"))
     pages = pt.drop("cluster_id")
     full = run_pipeline(spark, pages, work, "r3", PipelineConfig())
+    lineage = _lineage(full)
     assert full.metrics.read_commit("block")["docs"] == pt.count()
     cases = [
         ("cluster", ["block", "score"], ("clusters", "cc_iterations")),
@@ -110,6 +131,7 @@ def test_partial_resume(spark, corpus, tmp_path_factory):
         assert resumed.stages_skipped == skipped
         assert resumed.stages_run == [stage]
         assert {k: resumed.counts[k] for k in keys} == {k: full.counts[k] for k in keys}
+        assert _lineage(resumed) == lineage
 
 
 def test_committed_blocks_equal_primitive_reference(spark, tmp_path):
@@ -157,3 +179,87 @@ def test_committed_blocks_equal_primitive_reference(spark, tmp_path):
               .filter("stage = 'block_truncated'").collect()}
     assert census == over
     assert res.metrics.read_commit("block")["docs"] == kept_pages.count()
+
+
+def test_crash_before_each_marker_relaunches_clean(spark, tmp_path, monkeypatch):
+    """A crash after a stage wrote its output and lineage but before its
+    commit marker: the relaunch reruns that stage and ends with a clean
+    run's clusters and exactly a clean run's lineage rows — the rerun
+    replaces the stage's lineage file instead of adding a second copy."""
+    from datamatcher_spark.plans.lineage import StageCommits
+    from datamatcher_spark.plans.run import STAGES
+
+    pages = generate_pages_with_truth(spark, n_docs=300, seed=3).drop("cluster_id")
+    clean = run_pipeline(spark, pages, str(tmp_path / "clean"), "c", PipelineConfig())
+    work = str(tmp_path / "crashed")
+    write = StageCommits.write
+    # each launch crashes at one stage's marker; the next one reruns it
+    for stage in STAGES:
+        def crash(self, name, _stage=stage, **info):
+            if name == _stage:
+                raise OSError(f"crash before the {name} marker")
+            return write(self, name, **info)
+
+        monkeypatch.setattr(StageCommits, "write", crash)
+        with pytest.raises(OSError, match=stage):
+            run_pipeline(spark, pages, work, "c", PipelineConfig())
+        monkeypatch.undo()
+    resumed = run_pipeline(spark, pages, work, "c", PipelineConfig())
+    assert resumed.stages_run == ["cluster"]
+    assert _clusters(resumed) == _clusters(clean)
+    assert _lineage(resumed) == _lineage(clean)
+
+
+def test_relaunch_after_config_or_input_change_reruns(spark, tmp_path):
+    """A relaunch under the same run_id after the config or the input
+    changed reruns every stage with a fresh run's counts — the markers
+    committed for the old config or input never resume."""
+    from datamatcher_spark.plans.run import STAGES
+
+    src = str(tmp_path / "pages")
+
+    def write_pages(seed):
+        (generate_pages_with_truth(spark, n_docs=300, seed=seed).drop("cluster_id")
+         .write.mode("overwrite").parquet(src))
+
+    write_pages(1)
+    work = str(tmp_path / "job")
+    run_pipeline(spark, spark.read.parquet(src), work, "r", PipelineConfig())
+    edited = PipelineConfig(jw_title_threshold=0.95)
+    keys = ("docs", "blocks", "truncated_blocks", "pairs_scored",
+            "edges_accepted", "clusters", "cc_iterations")
+    cases = [
+        ("config", lambda: None),           # same input, edited config
+        ("input", lambda: write_pages(2)),  # same config, another corpus
+    ]
+    for case, change in cases:
+        change()
+        pages = spark.read.parquet(src)
+        again = run_pipeline(spark, pages, work, "r", edited)
+        fresh = run_pipeline(spark, pages, str(tmp_path / f"fresh-{case}"), "r", edited)
+        assert again.stages_run == list(STAGES), case
+        assert {k: again.counts[k] for k in keys} == {k: fresh.counts[k] for k in keys}, case
+        assert _lineage(again) == _lineage(fresh), case
+
+
+def test_lineage_commit_runs_no_spark_job(spark, tmp_path):
+    """The lineage rows are on the driver already: committing a stage
+    writes them and its marker without launching a Spark job."""
+    from datamatcher_spark.plans.lineage import MetricsTable
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    mt = MetricsTable(spark, tmp_path, "g", "fp")
+    rows = [{"partition_id": 0, "pair_count": 3, "score_histogram": {"0.95": 3}}]
+    try:
+        sc.setJobGroup("lineage-commit", "MetricsTable.commit")
+        mt.commit("score", rows, 12, pairs_scored=3)
+        assert tracker.getJobIdsForGroup("lineage-commit") == []
+        sc.setJobGroup("lineage-read", "MetricsTable.read")
+        got = [(r.run_id, r.stage, r.partition_id, r.pair_count, r.score_histogram,
+                r.wall_ms) for r in mt.read().collect()]
+        assert tracker.getJobIdsForGroup("lineage-read")  # the tracker sees jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == [("g", "score", 0, 3, {"0.95": 3}, 12)]
+    assert mt.read_commit("score")["pairs_scored"] == 3

@@ -219,7 +219,7 @@ def test_profile_fingerprint_invalidates_stale_resume(spark, tmp_path,
     docs = [
         json.loads(p.read_text()) for p in sorted((wd / "commits").glob("*.json"))
     ]
-    assert all("profile_fp" in d for d in docs)
+    assert all("fingerprint" in d for d in docs)
 
 
 def test_execute_profile_change_log_artifact(spark, tmp_path, profile_frames):
